@@ -374,7 +374,7 @@ def main() -> int:
             # Rebuild the DataFrame each run — pyspark 4.1 memoizes
             # execution per DataFrame object.  mapInArrow fast path:
             # the pyramid is Arrow-boundary-bound, not kernel-bound
-            # (bit-equality with the pandas-UDF path pinned by
+            # (bit-equality with the scalar arrow_udf path pinned by
             # test_rollup_e2e); uniform n_tok batches stay zero-copy.
             pool = pool_tiers_map_in_arrow(kind, window=4,
                                            num_tiers=tiers, sparse=sparse)

@@ -210,9 +210,12 @@ def test_run_tier_issues_no_stats_rescan_jobs(spark, base_df, workdir):
 
 
 def test_map_in_arrow_pooling_equals_pandas_udf(spark):
-    """pool_tiers_map_in_arrow (the uniform-batch zero-copy fast path)
-    must be BIT-IDENTICAL to the pandas-UDF path on uniform batches,
-    ragged batches (fallback), and across kernels incl. sparse."""
+    """The two Arrow surfaces over the shared batch codec —
+    pool_tiers_map_in_arrow (mapInArrow) and pool_all_tiers_udf (a
+    scalar arrow_udf in a projection) — must be BIT-IDENTICAL on
+    uniform batches (zero-copy view), ragged batches (length-group
+    gather), and across kernels incl. sparse.  The name predates the
+    move of the scalar UDFs from pandas to Arrow."""
     from pyspark.sql import functions as F
 
     from tinybrain_spark.udfs import pool_all_tiers_udf, pool_tiers_map_in_arrow
@@ -243,8 +246,8 @@ def test_map_in_arrow_pooling_equals_pandas_udf(spark):
 ])
 def test_pyramid_ragged_inputs_through_engine(spark, workdir, kernel, sparse):
     """Ragged n_tok (mixed lengths in one batch) drives the Arrow tier
-    mappers' per-length-group FALLBACK end to end; every tier must
-    still equal the per-row numpy kernels."""
+    mappers' length-group GATHER end to end; every tier must still
+    equal the per-row numpy kernels."""
     df = generate(spark, n_docs=96, n_tok=256, seed=13, num_partitions=3)
     df = df.withColumn(
         "tokens",
@@ -257,3 +260,22 @@ def test_pyramid_ragged_inputs_through_engine(spark, workdir, kernel, sparse):
     base = _tokens_by_doc(df)
     assert len({len(t) for t in base.values()}) == 4  # genuinely ragged
     _assert_tier_matches(engine, cfg, base, 3)
+
+
+def test_null_tokens_row_raises(spark, base_df, workdir):
+    """A null tokens row has no array to pool: both the scalar UDF and
+    the engine's tier step fail naming it, instead of a TypeError or a
+    silently empty output row."""
+    from tinybrain_spark.udfs import pool_udf
+
+    df = base_df.withColumn(
+        "tokens",
+        F.when(F.col("doc_id") == "doc_0000000003", F.lit(None)).otherwise(
+            F.col("tokens")),
+    )
+    udf = pool_udf("avg", window=4, num_tiers=1)
+    with pytest.raises(Exception, match="null"):
+        df.select(udf("tokens").alias("t")).collect()
+    cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="nul")
+    with pytest.raises(Exception, match="null"):
+        RollupEngine(spark, workdir).run_tier(df, cfg, tier=1, resume=False)

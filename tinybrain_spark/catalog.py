@@ -9,6 +9,7 @@ overwrite.  SURVEY.md §7 risk 'Iceberg offline availability'.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +74,16 @@ class Catalog:
             if any(f.endswith(".parquet") for f in files):
                 return True
         return False
+
+    def local_parquet_files(self, name: str) -> list[str] | None:
+        """Every parquet file of table ``name``, through its partition
+        directories, for metadata-only footer reads.  None on a remote
+        catalog: its footers are not os.path-reachable, and a local glob
+        there would silently match nothing, so callers scan instead."""
+        if not self.is_local:
+            return None
+        pattern = os.path.join(self.path(name), "**", "*.parquet")
+        return glob.glob(pattern, recursive=True)
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))

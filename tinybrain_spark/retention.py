@@ -22,27 +22,17 @@ from pyspark.sql import functions as F
 from .catalog import Catalog
 
 
-def _iter_parquet_files(catalog: Catalog, table: str):
-    import glob
-    import os
-
-    assert catalog.is_local, "parquet-footer shortcut is local-FS only"
-    base = catalog.path(table)
-    for f in glob.glob(os.path.join(base, "**", "*.parquet"), recursive=True):
-        yield f
-
-
 def _footer_column_max(catalog: Catalog, table: str, col: str):
     """Exact max of a column from parquet footer statistics (no job).
-    On a remote-FS catalog (file://, hdfs://, s3a://) footers aren't
-    os.path-reachable — return None so the caller scans, instead of the
-    local glob silently matching nothing."""
+    None when the footers are unreachable (remote catalog) or lack
+    stats, so the caller scans."""
     import pyarrow.parquet as pq
 
-    if not catalog.is_local:
-        return None  # stats unreachable -> caller must scan
+    files = catalog.local_parquet_files(table)
+    if files is None:
+        return None
     best = None
-    for f in _iter_parquet_files(catalog, table):
+    for f in files:
         md = pq.ParquetFile(f).metadata
         try:
             idx = md.schema.names.index(col)
@@ -59,14 +49,12 @@ def _footer_column_max(catalog: Catalog, table: str, col: str):
 def _footer_row_counts(catalog: Catalog, table: str) -> dict:
     import pyarrow.parquet as pq
 
-    if not catalog.is_local:
+    files = catalog.local_parquet_files(table)
+    if files is None:
         # remote FS: one Spark count instead of a local glob that would
         # silently return {} (and report rows_kept=0)
         return {catalog.path(table): catalog.read(table).count()}
-    counts: dict[str, int] = {}
-    for f in _iter_parquet_files(catalog, table):
-        counts[f] = pq.ParquetFile(f).metadata.num_rows
-    return counts
+    return {f: pq.ParquetFile(f).metadata.num_rows for f in files}
 
 
 @dataclass(frozen=True)

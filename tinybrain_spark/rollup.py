@@ -71,6 +71,25 @@ class RollupConfig:
         )
 
 
+def tier_step(config: RollupConfig, tier: int, guard_tiers: int | None = None):
+    """The mapInArrow step that builds ``tier`` from tier ``tier - 1``:
+    ``f(df) -> df`` emitting ``TIER_KEY_COLS + (tokens, n_tok[, accum,
+    denom])``.  AVG extends the persisted int64 accumulator;
+    mode/max/min/stride pool the previous tier's rendered values.  The
+    one dispatch shared by ``run_tier`` and the serving layer's residual
+    steps, so a served series is byte-identical to a materialized
+    tier."""
+    if config.kernel == "avg":
+        return avg_step_map_in_arrow(
+            window=config.window, sparse=config.sparse, tier=tier,
+            guard_tiers=guard_tiers, key_cols=TIER_KEY_COLS,
+        )
+    return pool_tier_map_in_arrow(
+        config.kernel, window=config.window, sparse=config.sparse,
+        guard_tiers=guard_tiers, key_cols=TIER_KEY_COLS,
+    )
+
+
 class RollupEngine:
     """Materializes a retention pyramid under ``catalog.base_path``.
 
@@ -297,13 +316,13 @@ class RollupEngine:
         Spark per-partition count (partition-pruned scan) rather than a
         local glob that silently returns {} and re-runs every source on
         resume."""
-        import glob
         import os
         from urllib.parse import unquote
 
         import pyarrow.parquet as pq
 
-        if not self.catalog.is_local:
+        files = self.catalog.local_parquet_files(table)
+        if files is None:
             return {
                 r[key]: r["n"]
                 for r in self.catalog.read(table)
@@ -314,12 +333,12 @@ class RollupEngine:
 
         counts: dict[str, int] = {}
         base = self.catalog.path(table)
-        for d in glob.glob(os.path.join(base, f"{key}=*")):
-            src = unquote(os.path.basename(d).split("=", 1)[1])
-            counts[src] = sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for f in glob.glob(os.path.join(d, "*.parquet"))
-            )
+        for f in files:
+            part = os.path.relpath(f, base).split(os.sep)[0]
+            if part.startswith(f"{key}="):
+                src = unquote(part.split("=", 1)[1])
+                rows = pq.ParquetFile(f).metadata.num_rows
+                counts[src] = counts.get(src, 0) + rows
         return counts
 
     def read_tier(self, config: RollupConfig, tier: int) -> DataFrame:
@@ -334,26 +353,9 @@ class RollupEngine:
         tier: int,
         prev_has_accum: bool,
     ) -> DataFrame:
-        w = config.window
-        guard = config.num_tiers if tier == 1 else None
-        # mapInArrow tier mappers: zero-copy dense view per uniform
-        # batch, key passthrough, no pandas object Series (semantics
-        # shared with the pandas UDFs via _avg_step_matrices / K.pool,
-        # pinned by test_rollup_e2e equality tests)
-        if config.kernel == "avg":
-            if tier > 1 and not prev_has_accum:
-                raise ValueError(
-                    f"tier {tier - 1} table lacks the persisted accumulator"
-                )
-            step = avg_step_map_in_arrow(
-                window=w, sparse=config.sparse, tier=tier,
-                guard_tiers=guard, key_cols=TIER_KEY_COLS,
+        if config.kernel == "avg" and tier > 1 and not prev_has_accum:
+            raise ValueError(
+                f"tier {tier - 1} table lacks the persisted accumulator"
             )
-            return step(src)
-
-        # mode/max/min/stride: recursive pooling of rendered values
-        pool = pool_tier_map_in_arrow(
-            config.kernel, window=w, sparse=config.sparse,
-            guard_tiers=guard, key_cols=TIER_KEY_COLS,
-        )
-        return pool(src)
+        guard = config.num_tiers if tier == 1 else None
+        return tier_step(config, tier, guard_tiers=guard)(src)

@@ -25,8 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollup import TIER_KEY_COLS, RollupConfig, RollupEngine
-from .udfs import avg_step_map_in_arrow, pool_tier_map_in_arrow
+from .rollup import TIER_KEY_COLS, RollupConfig, RollupEngine, tier_step
 
 
 @dataclass(frozen=True)
@@ -112,22 +111,6 @@ def read_series(
         df = df.where(F.col("time_bucket").between(lo, hi))
 
     for i in range(plan.residual_steps):
-        step_tier = plan.tier + 1 + i
-        if config.kernel == "avg":
-            step = avg_step_map_in_arrow(
-                window=config.window,
-                sparse=config.sparse,
-                tier=step_tier,
-                key_cols=TIER_KEY_COLS,
-            )
-            df = step(df)
-        else:
-            pool = pool_tier_map_in_arrow(
-                config.kernel,
-                window=config.window,
-                sparse=config.sparse,
-                key_cols=TIER_KEY_COLS,
-            )
-            df = pool(df)
+        df = tier_step(config, plan.tier + 1 + i)(df)
 
     return df.select(*TIER_KEY_COLS, "tokens", "n_tok")

@@ -1,30 +1,23 @@
-"""Arrow-vectorized pandas UDFs wrapping the numpy pooling kernels.
+"""Arrow-vectorized UDFs wrapping the numpy pooling kernels.
 
 The Arrow batch boundary (JVM -> Python worker) is this engine's analog
 of the reference's Python -> Cython boundary (downsample.py:53): data
 crosses once per ~4096-row batch, then everything is vectorized numpy.
 No per-row Python anywhere (BASELINE.json input_hint mandate).
 
-Rows inside a batch are grouped by token-array length and pooled as one
-dense 2-D matrix per length group — the batched analog of the
-reference's dense-plane kernels.
+Every pooling surface — the scalar ``arrow_udf``s and the mapInArrow
+tier mappers — goes through one Arrow batch codec: ``_gather`` views a
+``ListArray`` batch as one dense 2-D matrix per token-array length (the
+batched analog of the reference's dense-plane kernels), and
+``_assemble`` builds the output ``ListArray`` from the pooled matrices.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DataType, StructType
 
 from . import kernels as K
 
@@ -34,219 +27,8 @@ __all__ = [
     "pool_all_tiers_udf",
     "pool_tiers_map_in_arrow",
     "pool_tier_map_in_arrow",
-    "avg_step_udf",
     "avg_step_map_in_arrow",
-    "batch_apply",
 ]
-
-
-def _stack_by_length(
-    values: pd.Series,
-    dtype,
-) -> Iterator[tuple[np.ndarray, np.ndarray]]:
-    """Yield (row_indices, stacked_2d) per distinct array length.
-
-    One np.stack per length group keeps the kernel input dense; the
-    typical table has a handful of distinct n_tok values so this is
-    O(#groups) python, not O(#rows).
-    """
-    arrays = values.to_numpy()
-    lengths = np.fromiter((len(a) for a in arrays), dtype=np.int64, count=len(arrays))
-    for n in np.unique(lengths):
-        idx = np.nonzero(lengths == n)[0]
-        stacked = np.empty((len(idx), n), dtype=dtype)
-        for j, i in enumerate(idx):
-            stacked[j] = arrays[i]
-        yield idx, stacked
-
-
-def batch_apply(
-    values: pd.Series,
-    fn: Callable[[np.ndarray], np.ndarray],
-    dtype=np.int32,
-) -> pd.Series:
-    """Apply a batch kernel (2-D in, 2-D out) over a series of arrays,
-    grouping rows by length."""
-    out = np.empty(len(values), dtype=object)
-    for idx, stacked in _stack_by_length(values, dtype):
-        res = fn(stacked)
-        for j, i in enumerate(idx):
-            out[i] = res[j]
-    return pd.Series(out)
-
-
-def pool_udf(
-    kind: str,
-    window: int = 4,
-    num_tiers: int = 1,
-    sparse: bool = False,
-    tier: int | None = None,
-    guard_tiers: int | None = None,
-):
-    """Scalar pandas UDF: tokens array -> pooled array at `tier`
-    (default: the deepest tier). Stays fully inside one projection —
-    no shuffle is ever required for pooling itself.
-
-    ``guard_tiers``: enforce the pyramid-depth minimum-size guard
-    (accelerated.pyx:89-90, n >= window**guard_tiers) per batch, so the
-    engine needs no driver-side pre-scan to validate a deep pyramid."""
-    pick = (num_tiers if tier is None else tier) - 1
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _pool(tokens: pd.Series) -> pd.Series:
-        def kernel(batch: np.ndarray) -> np.ndarray:
-            if guard_tiers is not None:
-                K.validate_pool_args(
-                    batch.shape[1], window, guard_tiers, pot_only=False
-                )
-            res = K.pool(kind, batch, window=window, num_tiers=num_tiers,
-                         sparse=sparse, dtype=np.int32)
-            return res[pick]
-
-        return batch_apply(tokens, kernel)
-
-    return _pool
-
-
-def float_pool_udf(
-    kind: str = "avg",
-    window: int = 4,
-    num_tiers: int = 1,
-    sparse: bool = False,
-    tier: int | None = None,
-):
-    """Scalar pandas UDF over float32 token arrays: the reference's
-    float tier semantics — divide the running accumulator by
-    ``w^(m+1)`` with NO cycle renormalization (accelerated.pyx:469-599,
-    divisor at :497).  Input may be int or float; pooled in float32."""
-    pick = (num_tiers if tier is None else tier) - 1
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _pool(tokens: pd.Series) -> pd.Series:
-        def kernel(batch: np.ndarray) -> np.ndarray:
-            res = K.pool(kind, batch, window=window, num_tiers=num_tiers,
-                         sparse=sparse, dtype=np.float32)
-            return res[pick]
-
-        return batch_apply(tokens, kernel, dtype=np.float32)
-
-    return _pool
-
-
-def pool_all_tiers_udf(
-    kind: str,
-    window: int = 4,
-    num_tiers: int = 1,
-    sparse: bool = False,
-):
-    """Scalar pandas UDF: tokens -> array of per-tier arrays (the
-    reference's '[mip0, mip1, ...]' return shape, downsample.py:45)."""
-
-    @F.pandas_udf(ArrayType(ArrayType(IntegerType())))
-    def _pool(tokens: pd.Series) -> pd.Series:
-        out = np.empty(len(tokens), dtype=object)
-        for idx, stacked in _stack_by_length(tokens, np.int32):
-            res = K.pool(kind, stacked, window=window, num_tiers=num_tiers,
-                         sparse=sparse, dtype=np.int32)
-            for j, i in enumerate(idx):
-                out[i] = [tier[j] for tier in res]
-        return pd.Series(out)
-
-    return _pool
-
-
-def pool_tiers_map_in_arrow(
-    kind: str,
-    window: int = 4,
-    num_tiers: int = 1,
-    sparse: bool = False,
-):
-    """Arrow-native pooling: returns ``f(df) -> df`` mapping a frame
-    with a ``tokens array<int>`` column to ``(tiers
-    array<array<int>>)`` via ``mapInArrow`` — the high-throughput path
-    for UNIFORM-length batches (pre-tokenized training sequences padded
-    to a fixed n_tok, the 100TB ingest shape).
-
-    Why it beats the pandas UDF: profiling shows the bench pyramid is
-    Arrow-boundary-bound, not kernel-bound (an IDENTITY pandas UDF
-    costs more than the whole pooled pyramid).  Here the ListArray's
-    value buffer is viewed as a dense (n, L) int32 matrix zero-copy, the
-    kernels run once per batch, and the nested output ListArray is
-    built from two vectorized offset buffers — no pandas, no per-row
-    object lists on either side.  Ragged batches fall back to the
-    per-length-group path with identical results (pinned by test)."""
-    import pyarrow as pa
-
-    out_type = pa.list_(pa.list_(pa.int32()))
-    out_schema = StructType(
-        [StructField("tiers", ArrayType(ArrayType(IntegerType())), True)]
-    )
-
-    def _ragged(col: "pa.ListArray") -> "pa.Array":
-        out = np.empty(len(col), dtype=object)
-        for idx, stacked in _stack_by_length(col.to_pandas(), np.int32):
-            res = K.pool(kind, stacked, window=window, num_tiers=num_tiers,
-                         sparse=sparse, dtype=np.int32)
-            for j, i in enumerate(idx):
-                out[i] = [tier[j] for tier in res]
-        return pa.array(list(out), type=out_type)
-
-    def _pool_batches(batches):
-        for batch in batches:
-            col = batch.column(batch.schema.get_field_index("tokens"))
-            n = len(col)
-            if n == 0:
-                continue
-            offs = col.offsets.to_numpy()
-            lengths = np.diff(offs)
-            if col.null_count == 0 and (lengths == lengths[0]).all():
-                length = int(lengths[0])
-                mat = (
-                    col.values.to_numpy()[offs[0]: offs[-1]]
-                    .reshape(n, length)
-                    .astype(np.int32, copy=False)
-                )
-                res = K.pool(kind, mat, window=window,
-                             num_tiers=num_tiers, sparse=sparse,
-                             dtype=np.int32)
-                tier_lens = [r.shape[1] for r in res]
-                total = sum(tier_lens)
-                vals = np.empty((n, total), dtype=np.int32)
-                pos = 0
-                for r in res:
-                    vals[:, pos: pos + r.shape[1]] = r
-                    pos += r.shape[1]
-                # inner offsets: per row the tier boundaries shifted by
-                # row*total; row r's last boundary == row r+1's first,
-                # so ravel the open pattern and close with the total
-                pattern = np.concatenate(([0], np.cumsum(tier_lens)))
-                inner = (
-                    np.arange(n, dtype=np.int64)[:, None] * total
-                    + pattern[None, :]
-                )
-                inner_offsets = np.concatenate(
-                    [inner[:, :-1].ravel(), [n * total]]
-                ).astype(np.int32)
-                inner_list = pa.ListArray.from_arrays(
-                    pa.array(inner_offsets, type=pa.int32()),
-                    pa.array(vals.ravel(), type=pa.int32()),
-                )
-                outer_offsets = np.arange(
-                    0, n * num_tiers + 1, num_tiers, dtype=np.int32
-                )
-                tiers = pa.ListArray.from_arrays(
-                    pa.array(outer_offsets, type=pa.int32()), inner_list
-                )
-            else:
-                tiers = _ragged(col)
-            yield pa.RecordBatch.from_arrays(
-                [tiers], schema=pa.schema([("tiers", out_type)])
-            )
-
-    def apply(df):
-        return df.select("tokens").mapInArrow(_pool_batches, out_schema)
-
-    return apply
 
 
 def _uniform_matrix(col, dtype):
@@ -264,16 +46,196 @@ def _uniform_matrix(col, dtype):
     )
 
 
-def _list_from_matrix(mat: np.ndarray, pa_type):
-    """ListArray from a dense (n, L) matrix — two vectorized buffers."""
-    import pyarrow as pa
+def _ranges(starts, counts):
+    """``arange(s, s + c)`` per (start, count), concatenated, loop-free."""
+    ends = np.cumsum(counts)
+    return np.repeat(starts - ends + counts, counts) + np.arange(ends[-1])
 
-    n, length = mat.shape
-    offsets = pa.array(
-        np.arange(0, (n + 1) * length, length, dtype=np.int32),
-        type=pa.int32(),
+
+def _gather(col, name: str, dtype, groups=None):
+    """Gather: ``(groups, mats)``, the ascending row indices and dense
+    (k, L) matrix of each token-array length.  A uniform batch is one
+    zero-copy group; a ragged one is gathered in stable length order
+    with one fancy index, each group a view of its span.  Another
+    column's ``groups`` gather this one row-aligned (the sparse denom).
+    A null row raises rather than being read as an empty array."""
+    if col.null_count:
+        raise ValueError(f"null {name!r} row: every pooled row needs an array")
+    if groups is None or len(groups) == 1:
+        mat = _uniform_matrix(col, dtype)
+        if mat is not None:
+            return [np.arange(len(col))], [mat]
+    offs = col.offsets.to_numpy()
+    lengths = np.diff(offs)
+    if groups is None:
+        order = np.argsort(lengths, kind="stable")
+        groups = np.split(order, np.flatnonzero(np.diff(lengths[order])) + 1)
+    order = np.concatenate(groups)
+    sizes = np.array([len(idx) for idx in groups])
+    width = lengths[order]
+    group_width = width[np.cumsum(sizes) - sizes]
+    if (width != np.repeat(group_width, sizes)).any():
+        raise ValueError(f"{name!r} rows misaligned with the pooled ones")
+    flat = col.values.to_numpy()[_ranges(offs[order], width)]
+    spans = np.split(flat.astype(dtype, copy=False),
+                     np.cumsum(sizes * group_width)[:-1])
+    mats = [m.reshape(k, w) for m, k, w in zip(spans, sizes, group_width)]
+    return groups, mats
+
+
+def _assemble(n: int, groups, mats, dtype):
+    """Assemble: the ``n``-row ``ListArray`` whose rows ``groups[g]``
+    are ``mats[g]`` — cumsum offsets, then one vectorized scatter.  A
+    lone group spanning the batch (a uniform one) is in row order, so
+    its matrix is the value buffer as is."""
+    if len(mats) == 1 and len(mats[0]) == n:
+        offsets = np.arange(n + 1, dtype=np.int32) * mats[0].shape[1]
+        values = mats[0].ravel()
+    else:
+        rows = np.concatenate(groups)
+        width = np.repeat([m.shape[1] for m in mats], [len(m) for m in mats])
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        offsets[rows + 1] = width  # every row appears in exactly one group
+        np.cumsum(offsets, out=offsets)
+        values = np.empty(int(offsets[-1]), dtype=dtype)
+        values[_ranges(offsets[rows], width)] = np.concatenate(
+            [m.ravel() for m in mats]
+        )
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()),
+        pa.array(values, type=pa.from_numpy_dtype(dtype)),
     )
-    return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel(), type=pa_type))
+
+
+def _pooler(kind, window, num_tiers, sparse, tier=None, dtype=np.int32,
+            guard_tiers=None, all_tiers=False):
+    """tokens ``ListArray`` -> pooled ``ListArray`` at ``tier`` (default:
+    the deepest), or with ``all_tiers`` a ``list<list<int>>`` of every
+    tier (tier t of row r is inner row ``r * num_tiers + t``).
+
+    ``guard_tiers``: enforce the pyramid-depth minimum-size guard
+    (accelerated.pyx:89-90, n >= window**guard_tiers) per batch, so the
+    engine needs no driver-side pre-scan to validate a deep pyramid."""
+    pick = (num_tiers if tier is None else tier) - 1
+
+    def pool(tokens: pa.Array) -> pa.Array:
+        n = len(tokens)
+        groups, mats = _gather(tokens, "tokens", dtype)
+        if guard_tiers is not None:  # mats[0] holds the shortest rows
+            K.validate_pool_args(mats[0].shape[1], window, guard_tiers,
+                                 pot_only=False)
+        pooled = [K.pool(kind, mat, window=window, num_tiers=num_tiers,
+                         sparse=sparse, dtype=dtype) for mat in mats]
+        if not all_tiers:
+            return _assemble(n, groups, [p[pick] for p in pooled], dtype)
+        inner = _assemble(
+            n * num_tiers,
+            [idx * num_tiers + t for idx in groups for t in range(num_tiers)],
+            [mat for tiers in pooled for mat in tiers],
+            dtype,
+        )
+        outer = np.arange(0, n * num_tiers + 1, num_tiers, dtype=np.int32)
+        return pa.ListArray.from_arrays(pa.array(outer), inner)
+
+    return pool
+
+
+def _mapper(in_cols, out_ddl: str, step, key_cols=()):
+    """``f(df) -> df`` over mapInArrow: ``key_cols`` pass through, then
+    the ``out_ddl`` columns ``step(batch)`` returns by name."""
+
+    def run(batches):
+        for batch in batches:
+            if batch.num_rows:
+                cols = step(batch)
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(k) for k in key_cols] + list(cols.values()),
+                    names=[*key_cols, *cols],
+                )
+
+    def apply(df):
+        keys = [df.schema[k] for k in key_cols]
+        out = StructType(keys + DataType.fromDDL(out_ddl).fields)
+        return df.select(*key_cols, *in_cols).mapInArrow(run, out)
+
+    return apply
+
+
+_TIER_DDL = "tokens array<int>, n_tok int"  # rollup's tier schema
+
+
+def _tier_columns(tok, **extra) -> dict:
+    """``tok`` as the ``_TIER_DDL`` columns, then ``extra``."""
+    n_tok = pa.array(np.diff(tok.offsets.to_numpy()).astype(np.int32))
+    return {"tokens": tok, "n_tok": n_tok, **extra}
+
+
+def pool_udf(
+    kind: str,
+    window: int = 4,
+    num_tiers: int = 1,
+    sparse: bool = False,
+    tier: int | None = None,
+    guard_tiers: int | None = None,
+):
+    """Scalar Arrow UDF: tokens array -> pooled array at `tier`
+    (default: the deepest tier). Stays fully inside one projection —
+    no shuffle is ever required for pooling itself.  ``guard_tiers`` as
+    in ``_pooler``."""
+    return F.arrow_udf(
+        _pooler(kind, window, num_tiers, sparse, tier,
+                guard_tiers=guard_tiers),
+        "array<int>",
+    )
+
+
+def float_pool_udf(
+    kind: str = "avg",
+    window: int = 4,
+    num_tiers: int = 1,
+    sparse: bool = False,
+    tier: int | None = None,
+):
+    """Scalar Arrow UDF over float32 token arrays: the reference's
+    float tier semantics — divide the running accumulator by
+    ``w^(m+1)`` with NO cycle renormalization (accelerated.pyx:469-599,
+    divisor at :497).  Input may be int or float; pooled in float32."""
+    return F.arrow_udf(
+        _pooler(kind, window, num_tiers, sparse, tier, dtype=np.float32),
+        "array<float>",
+    )
+
+
+def pool_all_tiers_udf(
+    kind: str,
+    window: int = 4,
+    num_tiers: int = 1,
+    sparse: bool = False,
+):
+    """Scalar Arrow UDF: tokens -> array of per-tier arrays (the
+    reference's '[mip0, mip1, ...]' return shape, downsample.py:45)."""
+    return F.arrow_udf(
+        _pooler(kind, window, num_tiers, sparse, all_tiers=True),
+        "array<array<int>>",
+    )
+
+
+def pool_tiers_map_in_arrow(
+    kind: str,
+    window: int = 4,
+    num_tiers: int = 1,
+    sparse: bool = False,
+):
+    """``pool_all_tiers_udf`` as ``f(df) -> df`` over ``mapInArrow``:
+    ``tokens array<int>`` -> ``(tiers array<array<int>>)``, for
+    pre-tokenized sequences padded to a fixed n_tok (the 100TB ingest
+    shape, pooled from a zero-copy view of each batch)."""
+    pool = _pooler(kind, window, num_tiers, sparse, all_tiers=True)
+    return _mapper(
+        ("tokens",),
+        "tiers array<array<int>>",
+        lambda b: {"tiers": pool(b.column("tokens"))},
+    )
 
 
 def pool_tier_map_in_arrow(
@@ -285,62 +247,16 @@ def pool_tier_map_in_arrow(
 ):
     """One rollup tier (mode/max/min/stride or single-tier avg) as a
     mapInArrow projection with key-column passthrough: the production
-    tier path for uniform-length sequence batches (see
-    ``pool_tiers_map_in_arrow`` for why this beats the pandas UDF).
-    Returns ``f(df) -> df`` with columns ``key_cols + (tokens, n_tok)``
-    — the exact schema rollup's ``_pool_tier`` emits."""
-    import pyarrow as pa
-
-    def kernel(mat: np.ndarray) -> np.ndarray:
-        if guard_tiers is not None:
-            K.validate_pool_args(mat.shape[1], window, guard_tiers,
-                                 pot_only=False)
-        return K.pool(kind, mat, window=window, num_tiers=1,
-                      sparse=sparse, dtype=np.int32)[0]
-
-    def _batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column(batch.schema.get_field_index("tokens"))
-            mat = _uniform_matrix(col, np.int32)
-            if mat is not None:
-                pooled = kernel(mat)
-                tok = _list_from_matrix(pooled, pa.int32())
-                ntok = pa.array(
-                    np.full(n, pooled.shape[1], dtype=np.int32),
-                    type=pa.int32(),
-                )
-            else:
-                out = np.empty(n, dtype=object)
-                for idx, stacked in _stack_by_length(col.to_pandas(), np.int32):
-                    r = kernel(stacked)
-                    for j, i in enumerate(idx):
-                        out[i] = r[j]
-                tok = pa.array(list(out), type=pa.list_(pa.int32()))
-                ntok = pa.array(
-                    [len(x) for x in out], type=pa.int32()
-                )
-            keys = [
-                batch.column(batch.schema.get_field_index(k))
-                for k in key_cols
-            ]
-            yield pa.RecordBatch.from_arrays(
-                keys + [tok, ntok], names=[*key_cols, "tokens", "n_tok"]
-            )
-
-    def apply(df):
-        out = StructType(
-            [df.schema[k] for k in key_cols]
-            + [
-                StructField("tokens", ArrayType(IntegerType()), True),
-                StructField("n_tok", IntegerType(), True),
-            ]
-        )
-        return df.select(*key_cols, "tokens").mapInArrow(_batches, out)
-
-    return apply
+    tier path.  Returns ``f(df) -> df`` with columns ``key_cols +
+    (tokens, n_tok)`` — the exact schema rollup's ``_pool_tier``
+    emits."""
+    pool = _pooler(kind, window, 1, sparse, guard_tiers=guard_tiers)
+    return _mapper(
+        ("tokens",),
+        _TIER_DDL,
+        lambda b: _tier_columns(pool(b.column("tokens"))),
+        key_cols,
+    )
 
 
 def avg_step_map_in_arrow(
@@ -350,100 +266,46 @@ def avg_step_map_in_arrow(
     guard_tiers: int | None = None,
     key_cols: tuple[str, ...] = ("doc_id", "source", "time_bucket"),
 ):
-    """The AVG persisted-accumulator tier step as a mapInArrow
-    projection (key passthrough + tokens/n_tok/accum/denom) — identical
-    semantics to ``avg_step_udf`` via the shared ``_avg_step_matrices``
-    (pinned by test), minus the pandas object-Series round trip."""
-    import pyarrow as pa
+    """One retention-tier step for AVG from persisted accumulators, as a
+    mapInArrow projection (key passthrough + tokens/n_tok/accum/denom).
 
-    in_cols = ("tokens",) if tier == 1 else ("accum", "denom")
+    Tier k+1 extends the int64 block-sum accumulator persisted with
+    tier k instead of re-pooling rendered values — the engine analog of
+    the reference's multi-mip shared accumulator (accelerated.pyx:
+    223-259, SURVEY.md O2).  ``tier`` is 1-based; tier 1 initializes the
+    accumulator from raw tokens."""
+    if tier == 1:
+        in_cols = ("tokens",)
+    else:
+        in_cols = ("accum", "denom") if sparse else ("accum",)
 
-    def _batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column(batch.schema.get_field_index(in_cols[0]))
-            dcol = (
-                batch.column(batch.schema.get_field_index("denom"))
-                if tier > 1 and sparse
-                else None
-            )
-            mat = _uniform_matrix(col, np.int64)
-            dmat = _uniform_matrix(dcol, np.int64) if dcol is not None else None
-            if mat is not None and (dcol is None or dmat is not None):
-                acc, den, r = _avg_step_matrices(
-                    mat, dmat, window, sparse, tier, guard_tiers
-                )
-                accum = _list_from_matrix(acc, pa.int64())
-                denom = (
-                    _list_from_matrix(den, pa.int64())
-                    if sparse
-                    else pa.nulls(n, type=pa.list_(pa.int64()))
-                )
-                tok = _list_from_matrix(r, pa.int32())
-                ntok = pa.array(
-                    np.full(n, r.shape[1], dtype=np.int32), type=pa.int32()
-                )
-            else:
-                values = col.to_pandas()
-                denoms = dcol.to_pandas() if dcol is not None else None
-                acc_o = np.empty(n, dtype=object)
-                den_o = np.empty(n, dtype=object)
-                r_o = np.empty(n, dtype=object)
-                for idx, stacked in _stack_by_length(values, np.int64):
-                    dstack = None
-                    if tier > 1 and sparse:
-                        dstack = np.empty_like(stacked)
-                        for j, i in enumerate(idx):
-                            dstack[j] = denoms.iloc[i]
-                    acc, den, r = _avg_step_matrices(
-                        stacked, dstack, window, sparse, tier, guard_tiers
-                    )
-                    for j, i in enumerate(idx):
-                        acc_o[i] = acc[j]
-                        den_o[i] = den[j] if sparse else None
-                        r_o[i] = r[j]
-                accum = pa.array(list(acc_o), type=pa.list_(pa.int64()))
-                denom = pa.array(list(den_o), type=pa.list_(pa.int64()))
-                tok = pa.array(list(r_o), type=pa.list_(pa.int32()))
-                ntok = pa.array([len(x) for x in r_o], type=pa.int32())
-            keys = [
-                batch.column(batch.schema.get_field_index(k))
-                for k in key_cols
-            ]
-            yield pa.RecordBatch.from_arrays(
-                keys + [tok, ntok, accum, denom],
-                names=[*key_cols, "tokens", "n_tok", "accum", "denom"],
-            )
-
-    def apply(df):
-        out = StructType(
-            [df.schema[k] for k in key_cols]
-            + [
-                StructField("tokens", ArrayType(IntegerType()), True),
-                StructField("n_tok", IntegerType(), True),
-                StructField("accum", ArrayType(LongType()), True),
-                StructField("denom", ArrayType(LongType()), True),
-            ]
+    def step(batch):
+        n = batch.num_rows
+        groups, mats = _gather(batch.column(in_cols[0]), in_cols[0],
+                               np.int64)
+        dmats = [None] * len(mats)
+        if len(in_cols) == 2:
+            dmats = _gather(batch.column("denom"), "denom", np.int64,
+                            groups)[1]
+        acc, den, rendered = zip(*(
+            _avg_step_matrices(mat, dmat, window, sparse, tier, guard_tiers)
+            for mat, dmat in zip(mats, dmats)
+        ))
+        if sparse:
+            denom = _assemble(n, groups, den, np.int64)
+        else:
+            denom = pa.nulls(n, type=pa.list_(pa.int64()))
+        return _tier_columns(
+            _assemble(n, groups, rendered, np.int32),
+            accum=_assemble(n, groups, acc, np.int64),
+            denom=denom,
         )
-        cols = [*key_cols, *in_cols]
-        if tier > 1 and not sparse:
-            cols = [*key_cols, "accum"]
-        return df.select(*cols).mapInArrow(_batches, out)
 
-    return apply
+    out_ddl = f"{_TIER_DDL}, accum array<bigint>, denom array<bigint>"
+    return _mapper(in_cols, out_ddl, step, key_cols)
 
 
 # -- incremental tier stepping (the persisted-accumulator fast path) ----
-
-_STEP_SCHEMA = StructType(
-    [
-        StructField("accum", ArrayType(LongType()), False),
-        StructField("denom", ArrayType(LongType()), True),
-        StructField("rendered", ArrayType(IntegerType()), False),
-    ]
-)
 
 
 def _avg_step_params(window: int, tier: int) -> tuple[int, int, bool]:
@@ -466,85 +328,23 @@ def _avg_step_matrices(
     guard_tiers: int | None,
 ):
     """One dense length-group of the AVG tier step: returns
-    (acc int64 (n, L/w), den int64|None, rendered int32).  Shared by the
-    pandas and mapInArrow flavors so the cycle-renorm / sparse-denom
-    semantics live in exactly one place."""
+    (acc int64 (n, L/w), den int64|None, rendered int32).  The single
+    home of the cycle-renorm / sparse-denom semantics."""
     shift, prev_shift, renorm = _avg_step_params(window, tier)
-    if tier == 1:
-        if guard_tiers is not None:
-            # pyramid-depth guard per batch (pyx:89-90) — no
-            # driver-side pre-scan needed
-            K.validate_pool_args(
-                stacked.shape[1], window, guard_tiers, pot_only=False
-            )
-        acc = K._windows(stacked, window).sum(axis=2, dtype=np.int64)
-        den = (
-            K._windows((stacked != 0).astype(np.int64), window).sum(
-                axis=2, dtype=np.int64
-            )
-            if sparse
-            else None
+    if tier == 1 and guard_tiers is not None:
+        # pyramid-depth guard per batch (pyx:89-90), no driver pre-scan
+        K.validate_pool_args(
+            stacked.shape[1], window, guard_tiers, pot_only=False
         )
-    else:
-        prev = stacked
-        if renorm:
-            prev = prev >> prev_shift  # pyx:240-241 boundary renorm
-        acc = K._windows(prev, window).sum(axis=2, dtype=np.int64)
-        den = None
-        if sparse:
-            if renorm and window == 8:
-                dstack = dstack >> prev_shift  # pyx:758-761 quirk
-            den = K._windows(dstack, window).sum(axis=2, dtype=np.int64)
-
-    if sparse:
-        r = np.where(den == 0, 0, K._trunc_div(acc, np.maximum(den, 1)))
-    else:
+    prev = stacked >> prev_shift if renorm else stacked  # pyx:240-241
+    acc = K._windows(prev, window).sum(axis=2, dtype=np.int64)
+    if not sparse:
         r = K._render_int(acc, shift, np.dtype(np.int64))
+        return acc, None, r.astype(np.int32)
+    if tier == 1:
+        dstack = (stacked != 0).astype(np.int64)
+    elif renorm and window == 8:
+        dstack = dstack >> prev_shift  # pyx:758-761 quirk
+    den = K._windows(dstack, window).sum(axis=2, dtype=np.int64)
+    r = np.where(den == 0, 0, K._trunc_div(acc, np.maximum(den, 1)))
     return acc, den, r.astype(np.int32)
-
-
-def avg_step_udf(
-    window: int = 4,
-    sparse: bool = False,
-    tier: int = 1,
-    guard_tiers: int | None = None,
-):
-    """One retention-tier step for AVG from persisted accumulators.
-
-    Tier k+1 extends the int64 block-sum accumulator persisted with
-    tier k instead of re-pooling rendered values — the engine analog of
-    the reference's multi-mip shared accumulator (accelerated.pyx:
-    223-259, SURVEY.md O2).  ``tier`` is 1-based; tier 1 initializes the
-    accumulator from raw tokens.
-    """
-
-    @F.pandas_udf(_STEP_SCHEMA)
-    def _step(values: pd.Series, denoms: pd.Series) -> pd.DataFrame:
-        n = len(values)
-        accum_out = np.empty(n, dtype=object)
-        denom_out = np.empty(n, dtype=object)
-        rendered = np.empty(n, dtype=object)
-
-        for idx, stacked in _stack_by_length(values, np.int64):
-            dstack = None
-            if tier > 1 and sparse:
-                dstack = np.empty_like(stacked)
-                for j, i in enumerate(idx):
-                    dstack[j] = denoms.iloc[i]
-            acc, den, r = _avg_step_matrices(
-                stacked, dstack, window, sparse, tier, guard_tiers
-            )
-            for j, i in enumerate(idx):
-                accum_out[i] = acc[j]
-                denom_out[i] = den[j] if sparse else None
-                rendered[i] = r[j]
-
-        return pd.DataFrame(
-            {
-                "accum": pd.Series(accum_out),
-                "denom": pd.Series(denom_out),
-                "rendered": pd.Series(rendered),
-            }
-        )
-
-    return _step
